@@ -18133,7 +18133,7 @@ def q303(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r12 judge ask #8): half the corpus drains and its contribution
     dirs are merged into one committed ``c{K}`` consolidation
     (streaming/neardup.py:compact_neardup_state — crash-safe
-    _COMMITTED-marked protocol, index keeps its _kb partition layout),
+    _COMMITTED-marked protocol),
     then the second half drains ON TOP of the compacted state through
     the same checkpoint.  The oracle is the identical whole-corpus
     all-pairs exact Jaccard as q293 — hash-equality proves compaction

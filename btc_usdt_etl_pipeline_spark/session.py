@@ -59,10 +59,11 @@ def build_session(
         # Prefer shuffled-hash over sort-merge when the planner's size
         # conditions hold (build side < broadcastThreshold ×
         # shuffle.partitions AND ≥3× smaller than the probe side): skips
-        # both sort passes.  Measured r14 A/B (tools/probe_shj_ab2.py —
-        # within-session, order alternated per round, warm-up discarded;
-        # the earlier probe_shj_ab.py run overstated the win via a fixed
-        # smj-before-shj order): repeatable wins exactly where a
+        # both sort passes.  Measured r14 A/B (OPTIMIZATION_r14.md;
+        # the probe scripts are in commit 5522e45 — within-session,
+        # order alternated per round, warm-up discarded; the first A/B
+        # overstated the win via a fixed smj-before-shj order):
+        # repeatable wins exactly where a
         # conversion happens (q119 0.88x, q83 0.92x, q178 0.93x), the
         # other 7 SMJ-heavy queries unchanged plans, ±7% session noise.
         # The AQE threshold additionally converts SMJ→SHJ at runtime

@@ -23,11 +23,31 @@ def save_as_table(
 ) -> None:
     """Idempotent warehouse load.
 
-    With ``partition_by`` and dynamic overwrite, re-running a month's load
-    replaces exactly that month's partitions — reruns converge instead of
-    duplicating (the reference's append bug, ``process_data.py:125``)."""
+    With ``partition_by``, re-running a month's load replaces exactly
+    that month's partitions and leaves the other months in place —
+    reruns converge instead of duplicating (the reference's append bug,
+    ``process_data.py:125``).  ``saveAsTable`` in overwrite mode
+    replaces the whole table, so an existing table with the same
+    columns and partitioning is overwritten by position through
+    ``INSERT OVERWRITE ... WITH ('partitionOverwriteMode' = 'dynamic')``
+    — the SQL form of ``insertInto``, which, unlike
+    ``DataFrameWriter.insertInto``, honours the per-write option.  The
+    session's ``partitionOverwriteMode`` is never changed."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    if partition_by and mode == "overwrite" and spark.catalog.tableExists(
+        table
+    ):
+        existing = spark.catalog.listColumns(table)
+        cols = [c.name for c in existing]
+        parts = [c.name for c in existing if c.isPartition]
+        if parts == list(partition_by) and set(cols) == set(df.columns):
+            spark.sql(
+                f"INSERT OVERWRITE {table} "
+                "WITH ('partitionOverwriteMode' = 'dynamic') "
+                "SELECT * FROM {src}",
+                src=df.select(*cols),
+            )
+            return
     writer = df.write.format("parquet").mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -14,6 +14,8 @@ tuples and short/degenerate series.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 import btc_usdt_etl_pipeline_spark.operators.windows as W
@@ -117,48 +119,12 @@ def test_r14_strategy_validation():
     with pytest.raises(ValueError, match="strategy"):
         W.hurst_aggvar("v", strategy="bogus")
     with pytest.raises(ValueError, match="strategy"):
-        W.cusum("v", 1.0, strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
         W.kpss_level("v", strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
-        W.interpolate_linear("v", "ts", strategy="bogus")
 
 
-# ---- prefix-scan family (cusum / kpss) and anchor-carry (interpolate):
-# the r14 synthetic-offset-row + chunk-join machinery must equal the
-# plain full-prefix window BIT-FOR-BIT, across chunk boundaries, with
-# null values, short series, and grouped/ungrouped invocations.
-
-
-def test_cusum_chunked_bit_identical_grouped(spark, tiny_chunks):
-    df = _mk_series(spark)
-    # plant nulls so running sums skip terms on both plans
-    df = df.withColumn(
-        "v",
-        W.F.when(W.F.col("eid") % 11 == 5, None).otherwise(
-            W.F.col("v")
-        ),
-    )
-    mk = lambda s: W.cusum(
-        "v", target=5.0, slack=0.5, threshold=20.0,
-        partition_by="g", order_by=("ts", "eid"), strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 102
-    assert df.transform(mk("window")).columns == \
-        df.transform(mk("chunked")).columns
-
-
-def test_cusum_chunked_bit_identical_ungrouped(spark, tiny_chunks):
-    df = _mk_series(spark).where("g = 'hot'")
-    mk = lambda s: W.cusum(
-        "v", target=5.0, order_by=("ts", "eid"), strategy=s
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 97
-    assert "_cs_pk" not in df.transform(mk("chunked")).columns
+# ---- prefix-scan family (kpss): the r14 synthetic-offset-row + chunk-join
+# machinery must equal the plain full-prefix window BIT-FOR-BIT, across
+# chunk boundaries, for grouped and ungrouped invocations.
 
 
 def test_kpss_chunked_bit_identical_grouped(spark, tiny_chunks):
@@ -182,26 +148,6 @@ def test_kpss_chunked_bit_identical_ungrouped(spark, tiny_chunks):
     assert a == b and len(a) == 1
 
 
-def test_interpolate_chunked_bit_identical_grouped(spark, tiny_chunks):
-    # nulls planted mid-series AND straddling chunk boundaries (runs of
-    # 3 nulls with chunk size 8), plus an all-null tail group edge
-    df = _mk_series(spark).withColumn(
-        "vn",
-        W.F.when(W.F.col("eid") % 7 < 3, None).otherwise(
-            W.F.col("v")
-        ),
-    ).withColumn("tsec", W.F.col("eid").cast("double"))
-    mk = lambda s: W.interpolate_linear(
-        "vn", "tsec", partition_by=["g"], order_by=("ts", "eid"),
-        out="filled", strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 102
-    assert df.transform(mk("window")).columns == \
-        df.transform(mk("chunked")).columns
-
-
 def test_crossover_signal_chunked_bit_identical(spark, tiny_chunks):
     df = _mk_series(spark).withColumn(
         "fast", W.F.col("v") + (W.F.col("eid") % 5)
@@ -221,18 +167,35 @@ def test_crossover_signal_chunked_bit_identical(spark, tiny_chunks):
     assert ua == ub and len(ua) == 97
 
 
-def test_interpolate_chunked_bit_identical_ungrouped(spark, tiny_chunks):
-    df = _mk_series(spark).where("g = 'hot'").withColumn(
-        "vn",
-        W.F.when(W.F.col("eid") % 5 == 0, None).otherwise(
-            W.F.col("v")
+# ---- construction contract: the plain-window diagnostics build their
+# DataFrame without running a Spark job, even past the size gate that
+# sends the gated operators into their hot-key count pre-pass.
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda: W.cusum(
+            "v", target=5.0, partition_by="g", order_by=("ts", "eid")
         ),
-    ).withColumn("tsec", W.F.col("eid").cast("double"))
-    mk = lambda s: W.interpolate_linear(
-        "vn", "tsec", order_by=("ts", "eid"), out="filled",
-        strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 97
-    assert "_ip_pk" not in df.transform(mk("chunked")).columns
+        lambda: W.interpolate_linear(
+            "v", "ts", partition_by=["g"], order_by=("ts", "eid")
+        ),
+        lambda: W.seasonal_decompose(
+            "v", period=4, partition_by="g", order_by=("ts", "eid")
+        ),
+    ],
+    ids=["cusum", "interpolate_linear", "seasonal_decompose"],
+)
+def test_plain_window_diagnostics_build_lazily(spark, monkeypatch, op):
+    monkeypatch.setattr(W, "_CHUNK_THRESHOLD_BYTES", 0)
+    df = _mk_series(spark, n_hot=9, n_cold=3)
+    sc = spark.sparkContext
+    group = f"window-construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan-only")
+    try:
+        built = df.transform(op())
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert built.count() == 12

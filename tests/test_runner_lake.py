@@ -40,6 +40,24 @@ def test_etl_time_mode(spark):
         )
 
 
+def test_save_as_table_rerun_replaces_only_its_partitions(spark):
+    from btc_usdt_etl_pipeline_spark.sources.warehouse import save_as_table
+
+    overwrite_conf = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(overwrite_conf)
+    months = spark.createDataFrame(
+        [(1, "2024-01"), (2, "2024-02")], "v int, m string"
+    )
+    save_as_table(months, "t_wh_rerun", partition_by=["m"])
+    # columns out of table order: the rerun writes by table position
+    rerun = spark.createDataFrame([("2024-02", 3)], "m string, v int")
+    save_as_table(rerun, "t_wh_rerun", partition_by=["m"])
+    got = sorted((r.v, r.m) for r in spark.table("t_wh_rerun").collect())
+    # January is untouched; February is replaced, not appended to
+    assert got == [(1, "2024-01"), (3, "2024-02")]
+    assert spark.conf.get(overwrite_conf) == conf_before
+
+
 def test_configure_s3a_sets_hadoop_conf(spark):
     configure_s3a(
         spark, "http://localhost:9000", "ak", "sk", path_style=True

@@ -149,10 +149,8 @@ def test_streaming_neardup_retry_and_cross_batch(spark, tmp_path):
 def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     """Mid-stream compaction (c{K} protocol): pair state before/after
     compacting is identical, later batches build on the compacted
-    state, the index keeps its _kb partition layout, and a second
-    compaction folds the post-compaction batch in."""
-    import os
-
+    state, and a second compaction folds the post-compaction batch
+    in."""
     from btc_usdt_etl_pipeline_spark.streaming.neardup import (
         _contrib_state,
         compact_neardup_state,
@@ -166,17 +164,16 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     parts = [df.filter(F.col("doc_id") % 3 == i) for i in range(3)]
 
     state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
+    up = incremental_minhash_upsert(spark, state, **PARAMS)
     up(parts[0], 0)
     up(parts[1], 1)
     before = sorted(
         map(tuple, read_neardup_pairs(spark, state).collect())
     )
-    # regression: warehouse.save_as_table flips the session to dynamic
-    # partition overwrite, under which partitioned writes emit no root
-    # _SUCCESS — the compaction marker must not depend on it
+    # regression: under a session-wide dynamic partition overwrite,
+    # partitioned writes emit no root _SUCCESS — the compaction marker
+    # must not depend on it, and the c{K} write must stay a whole-dir
+    # replace
     prev_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
@@ -196,9 +193,6 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     for store in ("index", "corpus", "pairs"):
         k, live = _contrib_state(spark, f"{state}/{store}")
         assert k == 1 and live == []  # b0/b1 swept into c1
-    assert any(
-        n.startswith("_kb=") for n in os.listdir(f"{state}/index/c1")
-    )
     up(parts[2], 2)  # continues on the compacted state
     assert sorted(
         map(tuple, read_neardup_pairs(spark, state).collect())
@@ -212,121 +206,6 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     # a batch id at or below the compaction id must refuse to run
     with pytest.raises(ValueError, match="compaction"):
         up(parts[0], 2)
-
-
-def test_streaming_neardup_index_prune_plan(spark, tmp_path):
-    """The settled-index read carries the batch's _kb bucket set as a
-    PARTITION filter — the scan prunes files, not just rows."""
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _contrib_paths,
-        incremental_minhash_upsert,
-    )
-
-    rows = _corpus(89, n_base=12)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
-    up(df, 0)
-    idx = spark.read.parquet(
-        *_contrib_paths(spark, f"{state}/index")
-    ).filter(F.col("_kb").isin([0, 1, 2]))
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "_kb" in plan.split("PartitionFilters", 1)[1][:200]
-
-
-def test_streaming_neardup_bucket_resize_safe(spark, tmp_path):
-    """r14 (r13 ADVICE medium): resizing ``index_buckets`` mid-stream
-    must not lose pairs.  b0's dir carries ``_KB4``; a batch running
-    under B=16 must NOT apply its bucket filter to that dir (stale
-    modulus — matching band keys would silently drop), and a
-    compaction over the mixed-modulus store must fall back to an
-    unpartitioned, ``_kb``-free consolidation so no NULL/stale ``_kb``
-    row can ever meet a future ``isin`` filter."""
-    import os
-
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _contrib_state,
-        _kb_marker_of,
-        compact_neardup_state,
-        incremental_minhash_upsert,
-        read_neardup_pairs,
-    )
-
-    rows = _corpus(607)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = _batch_pairs(spark, df)
-    parts = [df.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    cross01 = [p for p in want if p[0] % 3 != p[1] % 3]
-    assert cross01  # fixture sanity: cross-batch pairs exist
-
-    state = str(tmp_path / "state")
-    up4 = incremental_minhash_upsert(
-        spark, state, index_buckets=4, **PARAMS
-    )
-    up16 = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
-    up4(parts[0], 0)
-    assert _kb_marker_of(spark, f"{state}/index/b0") == 4
-    up16(parts[1], 1)  # resized mid-stream: b0 read unfiltered
-    got01 = sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
-    assert got01 == _batch_pairs(
-        spark, parts[0].unionByName(parts[1])
-    )
-    # mixed-modulus compaction: unpartitioned, _kb dropped, no marker
-    compact_neardup_state(spark, state)
-    c1 = f"{state}/index/c1"
-    assert _contrib_state(spark, f"{state}/index") == (1, [])
-    assert not any(n.startswith("_kb=") for n in os.listdir(c1))
-    assert "_kb" not in spark.read.parquet(c1).columns
-    assert _kb_marker_of(spark, c1) is None
-    up16(parts[2], 2)  # builds on the compacted, filter-safe state
-    assert sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    ) == want
-    # uniform-modulus compaction keeps layout AND re-stamps the marker
-    compact_neardup_state(spark, state)
-
-
-def test_streaming_neardup_uniform_compaction_keeps_marker(
-    spark, tmp_path
-):
-    """Uniform-modulus compaction keeps the ``_kb`` layout and
-    re-stamps ``_KB{B}`` on the consolidated dir so later batches can
-    keep partition-filtering it."""
-    import os
-
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _kb_marker_of,
-        compact_neardup_state,
-        incremental_minhash_upsert,
-        read_neardup_pairs,
-    )
-
-    rows = _corpus(733, n_base=16)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    parts = [df.filter(F.col("doc_id") % 2 == i) for i in range(2)]
-    state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=8, **PARAMS
-    )
-    up(parts[0], 0)
-    up(parts[1], 1)
-    before = sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
-    compact_neardup_state(spark, state)
-    c1 = f"{state}/index/c1"
-    assert any(n.startswith("_kb=") for n in os.listdir(c1))
-    assert _kb_marker_of(spark, c1) == 8
-    assert before == sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
 
 
 def test_streaming_neardup_validates(spark, tmp_path):

@@ -1,24 +1,17 @@
-"""At-scale A/B for the link_prediction rank-then-attach rewrite.
+"""Time ``link_prediction`` on a graph big enough to measure.
 
-probe_linkpred_ab2 (within-session, alternating order) showed the
-sf0.1 fixtures are NOISE-BOUND: the candidate-pair set there is small
-enough that two extra hash-shuffles of it cost less than the session's
-±5% drift band (one session read 0.95x/0.94x, the rerun 1.01x/1.05x).
-The rewrite's claim is about SCALE — degree columns feed only OUTPUT
-fields of the final top-k rows, so attaching them before the heap
-shuffles the whole candidate set twice for nothing — so this probe
-builds a graph whose candidate set is big enough to measure:
+At sf0.1 the candidate-pair set is small, so the operator's run time
+is fixed per-job cost.  This probe builds a bipartite graph whose
+candidate set is large:
 
     edges = range(N).select(xxhash64(id) % M as src,
                             M + xxhash64(id+7) % M as dst)
 
-a bipartite graph with Poisson(~N/M) degrees — no zipf hot key, so the
-wedge join itself is skew-free and the measured delta isolates the
-tail (degree attach before vs after the top-k heap).  With N=5M,
-M=625k (avg degree 8/16 per side) the wedge mass is ~10^8 and the
-distinct candidate-pair set ~10^7 rows.  Both arms run in ONE session,
-intra-round order flipped each round, round 0 discarded — the
-probe_shj_ab2 methodology.
+Degrees are Poisson(~N/M) with no zipf hot key, so the wedge join is
+skew-free.  With N=5M, M=625k (avg degree 8/16 per side) the wedge
+mass is ~10^8 and the distinct candidate-pair set ~10^7 rows.  The
+query is written to the noop sink; round 0 is a warm-up and is
+discarded.
 
 Usage: python tools/probe_linkpred_scale.py [N_edges] [M_nodes_per_side]
 Env:   PROBE_RUNS (default 3).
@@ -38,8 +31,6 @@ sys.path.insert(
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tools.probe_linkpred_ab2 import old_link_prediction  # noqa: E402
-
 
 def main() -> None:
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
@@ -55,42 +46,36 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    def edges():
-        return spark.range(n_edges).select(
-            (F.xxhash64("id") % m_nodes).alias("src"),
-            (F.lit(m_nodes) + F.xxhash64(F.col("id") + 7) % m_nodes).alias(
-                "dst"
-            ),
-        )
-
-    arms = {"old": old_link_prediction, "new": link_prediction}
-    n_runs = int(os.environ.get("PROBE_RUNS", "3"))
-    samples: dict[str, list[float]] = {a: [] for a in arms}
-    for rnd in range(n_runs):
-        order = ["old", "new"] if rnd % 2 == 0 else ["new", "old"]
-        for arm in order:
-            spark.sparkContext.setJobDescription(f"linkpred-scale/{arm} r{rnd}")
-            t0 = time.time()
-            df = arms[arm](edges(), top_k=20)
-            df.write.mode("overwrite").format("noop").save()
-            el = time.time() - t0
-            spark.catalog.clearCache()
-            if rnd > 0:
-                samples[arm].append(el)
-            print(f"  round {rnd} {arm}: {el:.2f}s", flush=True)
-    print(
-        json.dumps(
-            {
-                a: {
-                    "median": round(statistics.median(s), 3),
-                    "all": [round(x, 2) for x in s],
-                }
-                for a, s in samples.items()
-            },
-            indent=1,
+    edges = spark.range(n_edges).select(
+        (F.xxhash64("id") % m_nodes).alias("src"),
+        (F.lit(m_nodes) + F.xxhash64(F.col("id") + 7) % m_nodes).alias(
+            "dst"
         ),
-        flush=True,
     )
+
+    n_runs = int(os.environ.get("PROBE_RUNS", "3"))
+    samples: list[float] = []
+    for rnd in range(n_runs):
+        spark.sparkContext.setJobDescription(f"linkpred-scale r{rnd}")
+        t0 = time.time()
+        link_prediction(edges, top_k=20).write.mode("overwrite").format(
+            "noop"
+        ).save()
+        el = time.time() - t0
+        spark.catalog.clearCache()
+        if rnd > 0:
+            samples.append(el)
+        print(f"  round {rnd}: {el:.2f}s", flush=True)
+    if samples:
+        print(
+            json.dumps(
+                {
+                    "median": round(statistics.median(samples), 3),
+                    "all": [round(x, 2) for x in samples],
+                }
+            ),
+            flush=True,
+        )
 
 
 if __name__ == "__main__":
